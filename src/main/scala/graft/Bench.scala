@@ -11,7 +11,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  private def session(cpus: Int): SparkSession = {
+  private[graft] def session(cpus: Int): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-bench")

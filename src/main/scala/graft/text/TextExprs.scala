@@ -374,6 +374,12 @@ object TextKernels {
     * bytes ARE its UTF-8 encoding (see [[wordRuns]]). One buffer
     * fetch, then zero-copy UTF8String views per word — no regex
     * machinery, no per-match char decoding.
+    *
+    * Aliasing: every word value is a view into the document's byte
+    * buffer, not a copy. That is safe only because the next projection
+    * copies the words into an UnsafeRow. An operator that buffered the
+    * raw ArrayData instead would pin the whole document's bytes for as
+    * long as it kept any one word.
     */
   def asciiWords(text: UTF8String): ArrayData = {
     val r = wordRunsOf(text) // null-total like the sibling kernels

@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import graft.rag.Bm25
 
@@ -9,15 +8,7 @@ import graft.rag.Bm25
   * length normalization), determinism of the fixed-order combine, and
   * the match-only result contract.
   */
-class Bm25Spec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class Bm25Spec extends AnyFunSuite with SparkSpec {
 
   private def df(rows: (Long, String)*): DataFrame = {
     import spark.implicits._

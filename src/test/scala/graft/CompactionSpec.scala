@@ -1,23 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.store.Compaction
 
 /** Small-file compaction: multiset preservation, file-count drop,
   * idempotence, and crash-recovery at every swap kill point.
   */
-class CompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class CompactionSpec extends AnyFunSuite with SparkSpec {
 
   private def rm(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import graft.text.Corpus
 
@@ -11,16 +9,7 @@ import graft.text.Corpus
   * scalatestplus is not in the offline cache; trial counts are small
   * because each trial runs Spark jobs)
   */
-class CorpusPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class CorpusPropertySpec extends AnyFunSuite with SparkSpec {
 
   private def check(trials: Int)(p: Prop): Unit = {
     val res = SCTest.check(

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.text.{Corpus, TextKernels}
 
 /** Corpus-curation operators vs brute-force oracles: decontamination
@@ -11,16 +9,7 @@ import graft.text.{Corpus, TextKernels}
   * duplicate-line / top-bigram fractions), distinctive terms (tf/df
   * recomputed naively), and the generalized n-shingle kernel.
   */
-class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class CorpusSpec extends AnyFunSuite with SparkSpec {
 
   private def words(s: String): Vector[String] =
     "[A-Za-z0-9]+".r.findAllIn(s).toVector

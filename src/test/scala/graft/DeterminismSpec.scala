@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Partition-layout determinism sweep: every registered query must
   * produce the SAME row multiset when the scan splits and shuffle
@@ -20,16 +18,7 @@ import org.scalatest.BeforeAndAfterAll
   * be too (centroid caches are cleared between layouts so training
   * genuinely re-runs).
   */
-class DeterminismSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class DeterminismSpec extends AnyFunSuite with SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,25 +1,14 @@
 package graft
 
 import java.sql.Timestamp
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.events.EventOps
 
 /** Sessionization + as-of join semantics on hand-computed fixtures,
   * plus the single-exchange plan shape both operators rely on at scale.
   */
-class EventOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class EventOpsSpec extends AnyFunSuite with SparkSpec {
 
   private def ts(minute: Int) = new Timestamp(minute * 60000L)
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import graft.multimodal.{Codecs, Multimodal}
@@ -12,15 +10,7 @@ import graft.multimodal.{Codecs, Multimodal}
   * totality on garbage, a roundtrip property, and the Spark-side
   * decode operators over genuinely encoded payloads.
   */
-class MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class MultimodalSpec extends AnyFunSuite with SparkSpec {
 
   // 2x2 reference image, row-major top-down RGB:
   //   (255,0,0) (0,255,0)

@@ -1,25 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.rag.{AnnIvf, AnnPq}
 
 /** Product quantization vs brute-force JVM oracles: encode argmin,
   * ADC arithmetic, and recall of the IVF-PQ search against the exact
   * L2 ranking.
   */
-class PqSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class PqSpec extends AnyFunSuite with SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.text.{Corpus, Dedup}
 
 /** Scale-shape audits: the physical plans the 100 TB story depends on
@@ -12,16 +11,7 @@ import graft.text.{Corpus, Dedup}
   * pair-join dedup operators), plus the dedup building blocks that the
   * DuckDB oracle can't unit-test in isolation.
   */
-class ScaleShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ScaleShapeSpec extends AnyFunSuite with SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 

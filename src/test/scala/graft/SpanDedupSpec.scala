@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.text.Dedup
 
@@ -11,15 +10,7 @@ import graft.text.Dedup
   * within-doc repetition, winner exemption, adjacency merging — and
   * the cleaned-text reconstruction invariants.
   */
-class SpanDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SpanDedupSpec extends AnyFunSuite with SparkSpec {
 
   private def df(rows: (Long, String)*): DataFrame = {
     import spark.implicits._

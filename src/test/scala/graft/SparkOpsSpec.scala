@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.gen.TranscriptGen
 import graft.multimodal.Multimodal
 import graft.rag.{AnnLsh, HashEmbedder, Similarity, TopK}
@@ -12,16 +11,7 @@ import graft.store.{Manifest, StoreOps}
 /** Distributed-path integration tests: the checkpoint/resume protocol,
   * store semantics, and JVM↔Column twin consistency.
   */
-class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SparkOpsSpec extends AnyFunSuite with SparkSpec {
 
   private def tmpDir(): String =
     java.nio.file.Files.createTempDirectory("graft_test").toString
@@ -215,6 +205,22 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("driver entry smoke: flagship query yields rows at sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
+  }
+
+  test("profile: jobs, stages, task CPU, drained rows and the final plan") {
+    val sf = "/root/testdata/sf0.001"
+    Seq("list_documents", "ngram_jaccard").foreach { name =>
+      val r = graft.bench.Profile.profile(spark, sf, name)
+      assert(r.jobs >= 1 && r.stages.nonEmpty && r.total.cpuNs > 0, name)
+      assert(r.rows == SparkEntry.queries(name)(spark, sf).count(), name)
+      // the listener's plans are the ones AQE finished with
+      val printed = graft.bench.Profile.report(r)
+      assert(printed.contains("isFinalPlan=true"), printed)
+      assert(!printed.contains("isFinalPlan=false"), printed)
+    }
+    val e = intercept[IllegalArgumentException](
+      graft.bench.Profile.profile(spark, sf, "no_such_query"))
+    assert(e.getMessage.contains("no_such_query"))
   }
 
   test("store: appendDedup keeps newest row per chunk_id") {

@@ -1,24 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.sources.Sources
 import graft.store.SkewAgg
 import graft.streaming.StreamingOps
 
 /** Streaming equivalence + source/sink utils + salted aggregation. */
-class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class StreamingSpec extends AnyFunSuite with SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 

@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.text.UrlOps
 
@@ -10,15 +9,7 @@ import graft.text.UrlOps
   * census, blocklist filtering, and the URL normalization rules the
   * crawl-dedup groups on.
   */
-class UrlOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class UrlOpsSpec extends AnyFunSuite with SparkSpec {
 
   private def df(rows: (Long, String)*): DataFrame = {
     import spark.implicits._
