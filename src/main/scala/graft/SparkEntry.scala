@@ -1877,9 +1877,10 @@ object Queries {
   val NeardupPlanes = 4
 
   /** Embedding-cosine near-duplicate pairs, LSH-bucket blocked with
-    * hamming-1 multiprobe: vectors are L2-normalized ONCE per row and
-    * keyed by the sign pattern of `NeardupPlanes` fixed hyperplanes
-    * (AnnLsh); the A-leg explodes into the exact bucket plus its
+    * hamming-1 multiprobe: vectors are L2-normalized once per row in
+    * each join leg (recomputed map-side, not cached) and keyed by the
+    * sign pattern of `NeardupPlanes` fixed hyperplanes (AnnLsh); the
+    * A-leg explodes into the exact bucket plus its
     * single-bit flips, so pairs whose buckets differ in ≤1 plane meet
     * in an EQUI-join, then the exact dot product verifies the
     * threshold. The bucket key makes this a hash-partitioned shuffle
@@ -1890,28 +1891,23 @@ object Queries {
     * pair meets on exactly one key, so no distinct is needed. The
     * DuckDB oracle applies the identical bucket + hamming-≤1 rule.
     */
-  def embedNearDup(s: SparkSession, dir: String, threshold: Double,
-      materialize: Boolean = true): DataFrame = {
+  def embedNearDup(s: SparkSession, dir: String, threshold: Double): DataFrame = {
     import graft.rag.{AnnLsh, Similarity, VectorExprs}
     val bucketMask = (1 << NeardupPlanes) - 1
     val base = SparkEntry.embeddings(s, dir).select(col("vec_id"),
       VectorExprs.l2Normalize(col("embedding").cast("array<double>")).as("v"),
       AnnLsh.bucketCol(col("embedding").cast("array<double>"))
         .bitwiseAND(lit(bucketMask)).as("bucket"))
-    if (materialize) { base.persist(); base.count() } // sketch once, not per leg
     val probes = array((col("bucket") +:
       (0 until NeardupPlanes).map(p => col("bucket").bitwiseXOR(lit(1 << p)))): _*)
     val e = base.select(col("vec_id").as("a_id"), col("v").as("va"),
       explode(probes).as("key"))
     val f = base.select(col("vec_id").as("b_id"), col("v").as("vb"),
       col("bucket").as("key"))
-    val pairs = e.join(f, Seq("key")).filter(col("a_id") < col("b_id"))
+    e.join(f, Seq("key")).filter(col("a_id") < col("b_id"))
       .filter(Similarity.dot(col("va"), col("vb")) >= threshold)
       .select("a_id", "b_id")
-    if (!materialize) return pairs // lazy plan, for shape audits
-    val out = pairs.localCheckpoint()
-    base.unpersist()
-    out
+      .localCheckpoint()
   }
 
   /** the EXACT all-pairs near-dup — the recall baseline the blocked

@@ -3,9 +3,9 @@ package graft.bench
 import scala.collection.mutable
 import org.apache.spark.executor.TaskMetrics
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftExprBridge, SparkSession}
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
-  SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
+  SparkListenerSQLExecutionStart}
 import graft.SparkEntry
 
 /** Spark profile of registered queries: wall time, jobs, stages, then
@@ -52,25 +52,13 @@ object Profile {
     def total: Stage = stages.foldLeft(Stage(-1))(_ + _)
   }
 
-  /** Jobs, per-stage task metrics and plans of one run at a time. */
+  /** Jobs, per-stage task metrics and plans of one run. */
   private final class Listener extends SparkListener {
     private var jobs = 0
-    private val running = mutable.Set.empty[Int]
     private val stages = mutable.Map.empty[Int, Stage]
     private val plans = mutable.LinkedHashMap.empty[Long, (String, String)]
-    private var drainId = -1L
-    private var drained = false
 
-    def reset(): Unit = synchronized {
-      jobs = 0; stages.clear(); plans.clear(); drainId = -1L; drained = false
-    }
-
-    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-      jobs += 1; running += e.jobId
-    }
-    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
-      running -= e.jobId; notifyAll()
-    }
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized { jobs += 1 }
     override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = synchronized {
       val id = e.stageInfo.stageId
       stages(id) = stages.getOrElse(id, Stage(id)).copy(name = e.stageInfo.name.takeWhile(_ != '\n'))
@@ -82,24 +70,9 @@ object Profile {
       e match {
         case s: SparkListenerSQLExecutionStart =>
           plans(s.executionId) = (s.description, s.physicalPlanDescription)
-          if (drainId < 0 && s.jobTags(DrainTag)) drainId = s.executionId
         case u: SparkListenerSQLAdaptiveExecutionUpdate if plans.contains(u.executionId) =>
           plans(u.executionId) = (plans(u.executionId)._1, u.physicalPlanDescription)
-        case s: SparkListenerSQLExecutionEnd if s.executionId == drainId =>
-          drained = true; notifyAll()
         case _ =>
-      }
-    }
-
-    /** Waits until the listener has seen the drain's SQL execution end
-      * and every job it saw start end: all their task events come first.
-      */
-    def await(): Unit = synchronized {
-      val deadline = System.currentTimeMillis() + 60000
-      while (!drained || running.nonEmpty) {
-        val left = deadline - System.currentTimeMillis()
-        if (left <= 0) throw new IllegalStateException("listener missed a run's end for 60 s")
-        wait(left)
       }
     }
 
@@ -109,34 +82,38 @@ object Profile {
     }
   }
 
-  /** Job tag of the collect() that drains a run: it tells the drain's
-    * SQL execution apart from any a query runs while it is built.
-    */
-  private val DrainTag = "graft-profile-drain"
-
   private def query(name: String): (SparkSession, String) => DataFrame =
     SparkEntry.queries.getOrElse(name, throw new IllegalArgumentException(
       s"unknown query '$name'; registered queries: " +
         SparkEntry.queries.keys.toSeq.sorted.mkString(", ")))
 
+  /** Runs `block` once, timed, and returns its Run under `label`;
+    * `block` returns the number of rows it drained. The Run holds the
+    * jobs, stages and final plans of every SQL execution the block
+    * started. The listener bus is drained before the listener is added
+    * (no event of earlier work reaches it) and before it is read (every
+    * event of the block's jobs has reached it).
+    */
+  def run(spark: SparkSession, label: String)(block: => Long): Run = {
+    val sc = spark.sparkContext
+    GraftExprBridge.drainListenerBus(sc)
+    val listener = new Listener
+    sc.addSparkListener(listener)
+    try {
+      val t0 = System.nanoTime()
+      val rows = block
+      val seconds = (System.nanoTime() - t0) / 1e9
+      GraftExprBridge.drainListenerBus(sc)
+      listener.run(label, rows, seconds)
+    } finally sc.removeSparkListener(listener)
+  }
+
   /** One warm run of `name`, then the fastest of three timed runs. */
   def profile(spark: SparkSession, sfDir: String, name: String): Run = {
     val fn = query(name)
-    val listener = new Listener
-    spark.sparkContext.addSparkListener(listener)
-    def once(): Run = {
-      listener.reset()
-      val t0 = System.nanoTime()
-      val df = fn(spark, sfDir)
-      spark.sparkContext.addJobTag(DrainTag)
-      val rows = try df.collect().length.toLong
-        finally spark.sparkContext.removeJobTag(DrainTag)
-      val seconds = (System.nanoTime() - t0) / 1e9
-      listener.await()
-      listener.run(name, rows, seconds)
-    }
-    try { once(); Seq.fill(3)(once()).minBy(_.seconds) }
-    finally spark.sparkContext.removeSparkListener(listener)
+    def once(): Run = run(spark, name)(fn(spark, sfDir).collect().length.toLong)
+    once()
+    Seq.fill(3)(once()).minBy(_.seconds)
   }
 
   /** The run's totals, one row per stage, then the plans. */

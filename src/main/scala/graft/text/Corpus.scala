@@ -102,8 +102,7 @@ object Corpus {
     * consumers: sizing count, bloom build, exact verify) and released
     * before returning — the result is localCheckpoint-materialized
     * first, so no lazily-returned frame ever depends on the cache (the
-    * decontaminateStream persist leak was exactly that trap;
-    * materialize=false restores the fully-lazy recompute shape).
+    * decontaminateStream persist leak was exactly that trap).
     *
     * @param expectedGrams caller's estimate of the benchmark's
     *   distinct gram count, sizing the filter without a counting
@@ -113,10 +112,8 @@ object Corpus {
     */
   def decontaminateBloom(train: DataFrame, bench: DataFrame, idCol: String,
       textCol: String, n: Int = 5, fpp: Double = 0.01,
-      expectedGrams: Long = 0L, materialize: Boolean = true): DataFrame = {
+      expectedGrams: Long = 0L): DataFrame = {
     require(fpp > 0 && fpp < 1, s"fpp must be in (0,1), got $fpp")
-    import org.apache.spark.sql.GraftExprBridge.{toColumn, toExpression}
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
     // the benchmark gram set has THREE consumers (sizing count, bloom
     // build, exact verify) — persist it for the call's duration so the
     // benchmark-side kernel runs once instead of three times. The cache
@@ -124,22 +121,14 @@ object Corpus {
     // returning: the contamination result — one narrow row per
     // contaminated doc — is materialized via localCheckpoint first (the
     // dedup-family pattern), which also spares every caller's action a
-    // recompute of the whole two-phase plan. materialize=false returns
-    // the lazy plan for shape audits, re-deriving the benchmark per
-    // consumer like the pre-r6 shape did.
-    val benchGrams = benchmarkGrams(bench, textCol, n)
-    if (!materialize)
-      return decontaminateBloomBody(train, benchGrams, idCol, textCol, n,
-        fpp, expectedGrams)
-    benchGrams.persist()
-    // unpersist in finally: a failing eager action (count, bloom head,
-    // result checkpoint) must not leave the cache pinned for the
-    // session lifetime in a resident engine
-    try {
-      val out = decontaminateBloomBody(train, benchGrams, idCol, textCol,
-        n, fpp, expectedGrams).localCheckpoint()
-      out
-    } finally benchGrams.unpersist()
+    // recompute of the whole two-phase plan. Unpersist in finally: a
+    // failing eager action (count, bloom head, result checkpoint) must
+    // not leave the cache pinned for the session lifetime in a resident
+    // engine.
+    val benchGrams = benchmarkGrams(bench, textCol, n).persist()
+    try decontaminateBloomBody(train, benchGrams, idCol, textCol, n, fpp,
+      expectedGrams).localCheckpoint()
+    finally benchGrams.unpersist()
   }
 
   private def decontaminateBloomBody(train: DataFrame, benchGrams: DataFrame,

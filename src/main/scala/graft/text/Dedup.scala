@@ -175,27 +175,13 @@ object Dedup {
     * text — (digest, doc_id, idx) only; the paragraph text moves
     * exactly once, in the (doc_id, idx)-keyed join + per-doc
     * reassembly exchange, whose state is bounded by the document's own
-    * size (the C10 rule).
-    *
-    * @param materialize eagerly materialize the paragraph decisions so
-    *   the text-free digest cache can be released before returning
-    *   (false forfeits the double-evaluation guard: the split+sha
-    *   pipeline inlines into both winner-join legs)
-    * @param reliable checkpoint the decisions to the session's
-    *   checkpoint dir (durable storage) instead of localCheckpoint —
-    *   survives executor loss / dynamic-allocation scale-down; the
-    *   right setting on a real cluster with non-static executors
+    * size (the C10 rule). The paragraph decisions are checkpointed
+    * before the reassembly join: durably to the SparkContext's
+    * checkpoint dir when one is set, with localCheckpoint otherwise.
     */
   def dedupParagraphs(docs: DataFrame, idCol: String, textCol: String,
-      minChars: Int = 50, materialize: Boolean = true,
-      reliable: Boolean = false): DataFrame = {
+      minChars: Int = 50): DataFrame = {
     require(minChars >= 1, s"minChars must be >= 1, got $minChars")
-    require(!reliable || materialize,
-      "reliable=true requires materialize=true (nothing to checkpoint otherwise)")
-    require(!reliable ||
-      docs.sparkSession.sparkContext.getCheckpointDir.isDefined,
-      "reliable=true requires spark.sparkContext.setCheckpointDir — " +
-        "point it at cluster-durable storage (HDFS/object store)")
     val paras = filter(split(col(textCol), "\\n{2,}"), p => trim(p) =!= "")
     val ex = graft.util.Staged.posexplodeOnce(
       docs.select(col(idCol).as("doc_id"), paras.as("ps")),
@@ -214,30 +200,16 @@ object Dedup {
     val winners = hashed.filter(!col("short"))
       .groupBy("h")
       .agg(min(struct(col("doc_id"), col("idx"))).as("winner"))
-    val decisions0 = hashed
+    // decisions are 3 narrow fields per paragraph — materialize them
+    // so the reassembly plan (and every caller action on it) replays
+    // materialized decisions instead of re-running the winner election
+    val decisions = checkpointed(hashed
       .join(winners, Seq("h"), "left")
       // a short paragraph's winner is null (excluded above) — the
       // `short ||` short-circuits it to kept either way
       .select(col("doc_id"), col("idx"),
         (col("short") ||
-          struct(col("doc_id"), col("idx")) === col("winner")).as("keep"))
-    // decisions are 3 narrow fields per paragraph — materialize them
-    // so the reassembly plan (and every caller action on it) replays
-    // materialized decisions instead of re-running the winner
-    // election. Two materialization grades:
-    //   - localCheckpoint (default): blocks live on executors; lineage
-    //     is TRUNCATED, so an executor loss (or dynamic-allocation
-    //     scale-down) between here and the caller's action fails the
-    //     job instead of recomputing. Fine single-JVM / static clusters.
-    //   - reliable=true: rdd.checkpoint() to the session's checkpoint
-    //     dir — decisions survive any executor loss (they're on
-    //     durable storage, re-read not recomputed). Costs one write +
-    //     read of the 3-narrow-column frame; the 100 TB default when
-    //     running with dynamic allocation or spot executors.
-    val decisions =
-      if (materialize) {
-        if (reliable) decisions0.checkpoint() else decisions0.localCheckpoint()
-      } else decisions0
+          struct(col("doc_id"), col("idx")) === col("winner")).as("keep")))
     ex.join(decisions, Seq("doc_id", "idx"))
       .groupBy("doc_id")
       .agg(count(lit(1)).cast("long").as("n_paras"),
@@ -247,6 +219,19 @@ object Dedup {
             struct(col("idx"), col("para"))))),
           s => s.getField("para")), "\n\n").as("cleaned"))
   }
+
+  /** Materializes a small decision frame so callers' actions replay it
+    * instead of re-running the election behind it. With a checkpoint
+    * dir set on the SparkContext it is a durable `checkpoint()`: the
+    * rows live on that storage and survive executor loss (dynamic
+    * allocation, spot executors). Without one it is `localCheckpoint()`:
+    * blocks on the executors, lineage truncated, so losing an executor
+    * before the caller's action fails the job — fine in one JVM or on a
+    * static cluster.
+    */
+  private def checkpointed(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
+    else df.localCheckpoint()
 
   // ---- minhash + banded LSH ----
 
@@ -274,13 +259,11 @@ object Dedup {
 
   /** candidate pairs: same (band, band_key) bucket for any band.
     *
-    * The band table is materialized (persist + eager count) before the
-    * self-join — the production shape (signatures are a persisted
-    * sketch table), and it stops Catalyst from inlining the full
-    * sha256 signature pipeline into BOTH join legs.
+    * The self-join's two legs share one reused exchange on the band
+    * table, so the signature kernel runs once; the (small) pair result
+    * is localCheckpoint-materialized.
     */
-  def minhashPairs(docs: DataFrame, idCol: String, textCol: String,
-      materialize: Boolean = true): DataFrame = {
+  def minhashPairs(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     // signatures via the native per-document kernel (TextKernels
     // .minhashSig): one pass over the text — tokenize, sha256 each
     // shingle once, fold the 16 mixed minima — entirely map-side. The
@@ -304,9 +287,7 @@ object Dedup {
     // the exchange output (and on a real cluster shuffle files are
     // served by the shuffle machinery, with none of the cross-executor
     // cold-fill races a lazily-filled cache has).
-    val raw = bandCandidates(bands)
-    if (!materialize) return raw // lazy plan, for shape audits
-    raw.localCheckpoint() // materialize the (small) result
+    bandCandidates(bands).localCheckpoint() // materialize the (small) result
   }
 
   /** (id, sig) → exploded (id, band, key) band table. An empty
@@ -385,17 +366,18 @@ object Dedup {
     * ScaleShapeSpec measures the subset/recall relation between them.
     */
   def ngramJaccardBanded(docs: DataFrame, idCol: String, textCol: String,
-      threshold: Double, materialize: Boolean = true): DataFrame = {
+      threshold: Double): DataFrame = {
     // no sketch persist: the band legs share one reused exchange; the
     // sa/sb attach legs each re-run the kernel map-side — measured
     // cheaper than the columnar cache round-trip it replaced (the
-    // embarrassingly-parallel-recompute trade, see minhashPairs)
+    // embarrassingly-parallel-recompute trade, see minhashPairs).
+    // <3-word docs (empty sig) need no filter here: bandsOf drops them,
+    // and the sa/sb legs inner-join on the candidates
     val base = spread(docs).select(col(idCol).as("id"),
       TextExprs.minhashSig(col(textCol)).as("sig"),
       TextExprs.shingleHashes(col(textCol), distinct = true).as("sh"))
-      .filter(size(col("sig")) > 0)
     val cand = bandCandidates(bandsOf(base.select(col("id"), col("sig"))))
-    val pairs = cand
+    cand
       .join(base.select(col("id").as("a_id"), col("sh").as("sa")), "a_id")
       .join(base.select(col("id").as("b_id"), col("sh").as("sb")), "b_id")
       .withColumn("common", size(array_intersect(col("sa"), col("sb"))))
@@ -404,8 +386,7 @@ object Dedup {
           .cast("double"))
       .filter(col("jaccard") >= threshold)
       .select("a_id", "b_id", "jaccard")
-    if (!materialize) return pairs // lazy plan, for shape audits
-    pairs.localCheckpoint()
+      .localCheckpoint()
   }
 
   // ---- simhash ----
@@ -445,7 +426,7 @@ object Dedup {
     * Exchange on a 15-bit key instead of an O(n²) cartesian.
     */
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int, materialize: Boolean = true): DataFrame = {
+      maxHamming: Int): DataFrame = {
     val nBlocks = maxHamming + 1
     require(maxHamming >= 0 && maxHamming < SimBits,
       s"maxHamming must be in [0, ${SimBits - 1}]")
@@ -470,13 +451,12 @@ object Dedup {
       col("blk"), col("key"))
     val b = blocks.select(col("id").as("b_id"), col("sim").as("sb"),
       col("blk"), col("key"))
-    val pairs = a.join(b, Seq("blk", "key")).filter(col("a_id") < col("b_id"))
+    a.join(b, Seq("blk", "key")).filter(col("a_id") < col("b_id"))
       .withColumn("hamming", bit_count(col("sa").bitwiseXOR(col("sb"))))
       .filter(col("hamming") <= maxHamming)
       .select("a_id", "b_id", "hamming")
       .distinct() // a pair can agree on several blocks
-    if (!materialize) return pairs // lazy plan, for shape audits
-    pairs.localCheckpoint()
+      .localCheckpoint()
   }
 
   // ---- near-dup clustering: connected components over pairs ----
@@ -683,8 +663,7 @@ object Dedup {
     * repartition with NO further exchange.)
     */
   def ngramJaccard(docs: DataFrame, idCol: String, textCol: String,
-      threshold: Double, maxDf: Int = 100,
-      materialize: Boolean = true): DataFrame = {
+      threshold: Double, maxDf: Int = 100): DataFrame = {
     // the index key is the 60-bit shingle HASH, not the string: every
     // downstream shuffle (df count, inverted-index self-join, pair agg)
     // moves 8-byte longs instead of ~25-byte strings, and join equality
@@ -758,15 +737,14 @@ object Dedup {
     val b = sh.select(col("id").as("b_id"), col("sh"))
     val common = a.join(b, Seq("sh")).filter(col("a_id") < col("b_id"))
       .groupBy("a_id", "b_id").agg(count(lit(1)).as("common"))
-    val pairs = common
+    common
       .join(sizes.withColumnRenamed("id", "a_id").withColumnRenamed("n", "na"), "a_id")
       .join(sizes.withColumnRenamed("id", "b_id").withColumnRenamed("n", "nb"), "b_id")
       .withColumn("jaccard",
         col("common") / (col("na") + col("nb") - col("common")).cast("double"))
       .filter(col("jaccard") >= threshold)
       .select("a_id", "b_id", "jaccard")
-    if (!materialize) return pairs // lazy plan, for shape audits
-    pairs.localCheckpoint()
+      .localCheckpoint()
   }
 
   // ---- span-level exact substring dedup ----
@@ -797,25 +775,12 @@ object Dedup {
     * no hot-key exposure. The paper's suffix array is the
     * single-machine construction; this k-gram formulation is the
     * shuffle-native one, at the cost of fixing a minimum match
-    * length of k tokens.
-    *
-    * @param materialize checkpoint the (small) span frame so callers'
-    *   actions replay materialized spans instead of re-running the
-    *   election — false returns the fully lazy plan (shape audits)
-    * @param reliable checkpoint spans to the session's checkpoint dir
-    *   instead of localCheckpoint (the dedupParagraphs trade: survives
-    *   executor loss under dynamic allocation)
+    * length of k tokens. The spans are checkpointed like
+    * [[dedupParagraphs]]' decisions.
     */
   def dupSpans(docs: DataFrame, idCol: String, textCol: String,
-      k: Int = 8, materialize: Boolean = true,
-      reliable: Boolean = false): DataFrame = {
+      k: Int = 8): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
-    require(!reliable || materialize,
-      "reliable=true requires materialize=true (nothing to checkpoint otherwise)")
-    require(!reliable ||
-      docs.sparkSession.sparkContext.getCheckpointDir.isDefined,
-      "reliable=true requires spark.sparkContext.setCheckpointDir — " +
-        "point it at cluster-durable storage (HDFS/object store)")
     // no occurrence-frame persist: the winner election and the mark
     // join each evaluate the gram kernel map-side — measured cheaper
     // at sf0.1 than filling and re-reading a columnar cache of the
@@ -833,11 +798,9 @@ object Dedup {
     val dups = occ.join(winners, Seq("g"))
       .filter(struct(col("doc_id"), col("pos")) =!= col("w"))
       .select("doc_id", "pos")
-    val spans0 = mergeWindows(dups, k)
-    if (!materialize) return spans0
     // spans are 3 narrow fields per duplicated REGION (not per gram) —
     // materialize them so callers' actions never re-run the election
-    if (reliable) spans0.checkpoint() else spans0.localCheckpoint()
+    checkpointed(mergeWindows(dups, k))
   }
 
   /** gaps-and-islands merge of marked FIXED-width k-token windows
@@ -939,9 +902,8 @@ object Dedup {
     * offsets through the tokenizer, which [[WordRegex]] discards).
     */
   def dedupSpans(docs: DataFrame, idCol: String, textCol: String,
-      k: Int = 8, materialize: Boolean = true,
-      reliable: Boolean = false): DataFrame = {
-    val spans = dupSpans(docs, idCol, textCol, k, materialize, reliable)
+      k: Int = 8): DataFrame = {
+    val spans = dupSpans(docs, idCol, textCol, k)
     val perDoc = spans.groupBy("doc_id").agg(
       count(lit(1)).cast("long").as("n_spans"),
       sum(col("span_end") - col("span_start")).cast("long").as("dup_tokens"),

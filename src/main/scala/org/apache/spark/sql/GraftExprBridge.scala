@@ -23,4 +23,10 @@ object GraftExprBridge {
       case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
       case _ => None
     }
+
+  /** Blocks until every event posted so far has reached every listener
+    * (the listener bus is private[spark]).
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

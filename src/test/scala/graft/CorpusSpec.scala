@@ -233,30 +233,26 @@ class CorpusSpec extends AnyFunSuite with SparkSpec {
     intercept[IllegalArgumentException] {
       Dedup.dedupParagraphs(docs, "doc_id", "text", minChars = 0)
     }
-    // reliable materialization (checkpoint-dir-backed, the dynamic-
-    // allocation-safe path) must be value-identical to the default
-    val ckDir = java.nio.file.Files.createTempDirectory("graft_ck").toString
+    // with a checkpoint dir set, the decisions are checkpointed to it
+    // (durable storage, the dynamic-allocation-safe path): the files
+    // land there and the values are identical to the localCheckpoint run
+    val ckDir = java.nio.file.Files.createTempDirectory("graft_ck").toFile
     val prior = spark.sparkContext.getCheckpointDir
+    def files(f: java.io.File): Seq[java.io.File] =
+      Option(f.listFiles).toSeq.flatten.flatMap(c => if (c.isDirectory) files(c) else Seq(c))
     try {
-      // reliable without a checkpoint dir is a hard error, not a
-      // silent localCheckpoint downgrade
-      if (prior.isEmpty) intercept[IllegalArgumentException] {
-        Dedup.dedupParagraphs(docs, "doc_id", "text", reliable = true)
-      }
-      spark.sparkContext.setCheckpointDir(ckDir)
-      val rel = Dedup.dedupParagraphs(docs, "doc_id", "text", reliable = true)
+      spark.sparkContext.setCheckpointDir(ckDir.toString)
+      val durable = Dedup.dedupParagraphs(docs, "doc_id", "text")
         .as[(Long, Long, Long, String)].collect().sortBy(_._1).toList
-      assert(rel == got)
+      assert(durable == got)
+      assert(files(ckDir).nonEmpty, s"no checkpoint files under $ckDir")
     } finally {
-      prior.foreach(spark.sparkContext.setCheckpointDir)
+      // a null dir unsets it (local mode), restoring the localCheckpoint path
+      spark.sparkContext.setCheckpointDir(prior.orNull)
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles).foreach(_.foreach(rm)); f.delete()
       }
-      rm(new java.io.File(ckDir))
-    }
-    intercept[IllegalArgumentException] {
-      Dedup.dedupParagraphs(docs, "doc_id", "text",
-        materialize = false, reliable = true)
+      rm(ckDir)
     }
   }
 

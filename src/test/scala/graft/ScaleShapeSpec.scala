@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.bench.Profile
 import graft.text.{Corpus, Dedup}
 
 /** Scale-shape audits: the physical plans the 100 TB story depends on
@@ -17,6 +18,31 @@ class ScaleShapeSpec extends AnyFunSuite with SparkSpec {
 
   private def plan(df: DataFrame): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+
+  /** Formatted final plans of every SQL execution that building and
+    * draining `df` started: for an operator that materializes while it
+    * is built (localCheckpoint), the plan that did the work, not only
+    * the scan of its result.
+    */
+  private def executedPlans(df: => DataFrame): Seq[String] =
+    Profile.run(spark, "audit")(df.collect().length.toLong).plans.map(_._2)
+
+  /** (description, plan) of every SQL execution that building `df`
+    * started, then the (unexecuted) plan of the frame it returned.
+    */
+  private def builtPlans(df: => DataFrame): Seq[(String, String)] = {
+    var built: DataFrame = null
+    val r = Profile.run(spark, "build") { built = df; 0L }
+    r.plans :+ ("returned frame" -> plan(built))
+  }
+
+  private def cartesianFree(plans: Seq[String]): Boolean =
+    plans.forall(p => !p.contains("CartesianProduct") &&
+      !p.contains("BroadcastNestedLoopJoin"))
+
+  /** some plan joins on an equality key (a hash or sort-merge join) */
+  private def equiJoined(plans: Seq[String]): Boolean =
+    plans.exists(p => p.contains("SortMergeJoin") || p.contains("HashJoin"))
 
   test("tpch_region_stats: both dims join as BroadcastHashJoin") {
     val p = plan(SparkEntry.queries("tpch_region_stats")(spark, sf))
@@ -63,21 +89,20 @@ class ScaleShapeSpec extends AnyFunSuite with SparkSpec {
     val docs = (0 until 20)
       .map(i => (i.toLong, s"alpha beta gamma delta epsilon doc$i tail"))
       .toDF("doc_id", "text")
+    // the pair operators localCheckpoint their result: audit the
+    // plans of the executions the real call ran, the checkpoint's too
     val plans = Seq(
-      "minhash" -> plan(Dedup.minhashPairs(docs, "doc_id", "text", materialize = false)),
-      "simhash" -> plan(Dedup.simhashPairs(docs, "doc_id", "text", 3, materialize = false)),
-      "jaccard" -> plan(Dedup.ngramJaccard(docs, "doc_id", "text", 0.5, materialize = false)),
-      "incremental" -> plan(Dedup.minhashPairsIncremental(
+      "minhash" -> executedPlans(Dedup.minhashPairs(docs, "doc_id", "text")),
+      "simhash" -> executedPlans(Dedup.simhashPairs(docs, "doc_id", "text", 3)),
+      "jaccard" -> executedPlans(Dedup.ngramJaccard(docs, "doc_id", "text", 0.5)),
+      "incremental" -> Seq(plan(Dedup.minhashPairsIncremental(
         docs.filter(col("doc_id") % 2 === 0),
-        docs.filter(col("doc_id") % 2 =!= 0), "doc_id", "text")),
-      // NOT dedup_keep_best here: connectedComponents executes eagerly
-      // during construction, so its audited plan would only be the
-      // comps⋈quality tail — a vacuous (and expensive) assertion; its
-      // pair join is exactly simhashPairs, audited above
-      "set_ops" -> plan(SparkEntry.queries("set_ops")(spark, sf)))
-    plans.foreach { case (name, p) =>
-      assert(!p.contains("BroadcastNestedLoopJoin"), s"$name:\n$p")
-      assert(!p.contains("CartesianProduct"), s"$name:\n$p")
+        docs.filter(col("doc_id") % 2 =!= 0), "doc_id", "text"))),
+      // NOT dedup_keep_best here: its pair join is exactly simhashPairs,
+      // audited above, and the suite sweep covers its build-time plans
+      "set_ops" -> Seq(plan(SparkEntry.queries("set_ops")(spark, sf))))
+    plans.foreach { case (name, ps) =>
+      assert(equiJoined(ps) && cartesianFree(ps), s"$name:\n${ps.mkString("\n")}")
     }
   }
 
@@ -100,9 +125,8 @@ class ScaleShapeSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("embed_neardup plans an equi-join on the LSH bucket, no cartesian") {
-    val p = plan(Queries.embedNearDup(spark, sf, 0.4, materialize = false))
-    assert(!p.contains("BroadcastNestedLoopJoin"), p)
-    assert(!p.contains("CartesianProduct"), p)
+    val ps = executedPlans(Queries.embedNearDup(spark, sf, 0.4))
+    assert(equiJoined(ps) && cartesianFree(ps), ps.mkString("\n"))
   }
 
   test("blocked near-dup is a subset of the exact pairs with measured recall") {
@@ -412,26 +436,24 @@ class ScaleShapeSpec extends AnyFunSuite with SparkSpec {
     // that no kernel name ever appears in a physical Filter condition.
     val kernels = Seq("shinglehashes", "minhashsig", "hashembed",
       "simhash", "wordstats")
-    val plans = Map(
-      "ngram_lazy" -> plan(Dedup.ngramJaccard(
-        spark.read.parquet(s"$sf/documents.parquet"), "doc_id", "text",
-        0.8, materialize = false)),
-      "minhash_lazy" -> plan(Dedup.minhashPairs(
-        spark.read.parquet(s"$sf/documents.parquet"), "doc_id", "text",
-        materialize = false)),
-      "decontaminate" -> plan(SparkEntry.queries("decontaminate")(spark, sf)),
-      // the registered query materializes (localCheckpoint) — audit the
-      // LAZY shape, which is the plan that actually executes inside it
-      "decontaminate_bloom" -> plan {
-        val d = spark.read.parquet(s"$sf/documents.parquet")
-        Corpus.decontaminateBloom(
-          d.filter(col("doc_id") % 20 =!= 0), d.filter(col("doc_id") % 20 === 0),
-          "doc_id", "text", n = 4, materialize = false)
-      },
-      "embed_docs" -> plan(SparkEntry.queries("embed_docs")(spark, sf)),
-      "vocab_top" -> plan(SparkEntry.queries("vocab_top")(spark, sf)),
-      "distinctive_terms" -> plan(SparkEntry.queries("distinctive_terms")(spark, sf)))
-    for ((name, p) <- plans) {
+    // the dedup operators and decontaminate_bloom localCheckpoint their
+    // result: audit the plans of the executions the real call ran
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val executed = Map(
+      "ngram_jaccard" -> executedPlans(Dedup.ngramJaccard(docs, "doc_id", "text", 0.8)),
+      "ngram_jaccard_banded" -> executedPlans(
+        Dedup.ngramJaccardBanded(docs, "doc_id", "text", 0.8)),
+      "minhash_pairs" -> executedPlans(Dedup.minhashPairs(docs, "doc_id", "text")),
+      "decontaminate_bloom" -> executedPlans(Corpus.decontaminateBloom(
+        docs.filter(col("doc_id") % 20 =!= 0), docs.filter(col("doc_id") % 20 === 0),
+        "doc_id", "text", n = 4)))
+    // the executed plans must include the ones that run the kernel
+    for ((name, ps) <- executed)
+      assert(ps.exists(p => kernels.exists(p.toLowerCase.contains)),
+        s"$name: no kernel in\n${ps.mkString("\n")}")
+    val planned = Seq("decontaminate", "embed_docs", "vocab_top", "distinctive_terms")
+      .map(q => q -> Seq(plan(SparkEntry.queries(q)(spark, sf))))
+    for ((name, ps) <- executed ++ planned; p = ps.mkString("\n")) {
       val badConds = p.linesIterator
         .filter(_.trim.startsWith("Condition"))
         .filter(l => kernels.exists(l.toLowerCase.contains))
@@ -447,32 +469,34 @@ class ScaleShapeSpec extends AnyFunSuite with SparkSpec {
     // path. The rewrite probes via the native BloomFilterMightContain
     // over a binary literal; this pins (a) no UDF anywhere in the
     // plan, (b) the probe present as a Filter condition, (c) the
-    // filter inside a WholeStageCodegen span (the formatted explain
-    // marks codegen'd operators with a (codegen id)).
-    // the registered query materializes (localCheckpoint), returning a
-    // Scan ExistingRDD — audit the LAZY plan, which is what executes
-    // inside the materialization
+    // filter inside a WholeStageCodegen span. The operator
+    // localCheckpoints its result, so the audited plans are the final
+    // plans of the executions the real call ran, the checkpoint's too.
     val d0 = spark.read.parquet(s"$sf/documents.parquet")
-    val df = Corpus.decontaminateBloom(
+    val ps = executedPlans(Corpus.decontaminateBloom(
       d0.filter(col("doc_id") % 20 =!= 0), d0.filter(col("doc_id") % 20 === 0),
-      "doc_id", "text", n = 4, materialize = false)
-    val p = plan(df)
-    assert(!p.toLowerCase.contains("batchevalpython") &&
-      !p.contains("UDF") && !p.contains("ScalaUDF"), p)
-    assert(p.contains("might_contain"), p)
-    // codegen spans only appear on the FINAL (post-AQE) executed plan —
-    // run the query, then require the probe's Filter line to carry the
-    // *(n) whole-stage-codegen marker in the simple plan string
-    df.collect()
-    // the AdaptiveSparkPlan string repeats the tree as "== Initial
-    // Plan ==" WITHOUT codegen stars — judge only the final section
-    val executed = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
-    val probeLines = executed.linesIterator
-      .filter(l => l.contains("might_contain") && l.contains("Filter")).toList
-    assert(probeLines.nonEmpty, s"no might_contain Filter in:\n$executed")
-    assert(probeLines.forall(_.contains("*(")),
-      s"prescreen Filter not codegen'd:\n${probeLines.mkString("\n")}")
+      "doc_id", "text", n = 4))
+    val all = ps.mkString("\n")
+    assert(!all.toLowerCase.contains("batchevalpython") &&
+      !all.contains("UDF") && !all.contains("ScalaUDF"), all)
+    // the formatted tree marks an operator inside a whole-stage-codegen
+    // span "* Name (id)"; the detail section names the probe Filters by
+    // their Condition. The outer "== Initial Plan ==" subtree is the
+    // plan before AQE's codegen collapse and is never marked, so only
+    // the final plan's probe Filters are judged.
+    val probes = ps.flatMap { p =>
+      val ids = p.split("\n\n").toSeq.flatMap { b =>
+        "^\\((\\d+)\\) Filter".r.findFirstMatchIn(b.trim)
+          .filter(_ => b.linesIterator.exists(l =>
+            l.startsWith("Condition") && l.contains("might_contain")))
+          .map(_.group(1))
+      }
+      p.split("\n\\+- == Initial Plan ==")(0).linesIterator
+        .filter(l => ids.exists(id => l.endsWith(s"Filter ($id)"))).toSeq
+    }
+    assert(probes.nonEmpty, s"no might_contain Filter in:\n$all")
+    assert(probes.forall(_.contains("* Filter (")),
+      s"prescreen Filter not codegen'd:\n${probes.mkString("\n")}")
   }
 
   test("suite sweep: EVERY registered query plans cartesian-free") {
@@ -480,18 +504,31 @@ class ScaleShapeSpec extends AnyFunSuite with SparkSpec {
     // sweep is the structural floor for the whole contract surface — a
     // future query that quietly plans a CartesianProduct or
     // BroadcastNestedLoopJoin (the all-pairs scale-killers) fails here
-    // even without a dedicated test. Sole exception: the O(n²) recall
-    // BASELINE embed_neardup_exact, whose non-equi a_id < b_id join is
-    // intentional and hard-ceilinged at 100k rows by its own guard.
+    // even without a dedicated test. It checks the plans of the
+    // executions a query runs while it is built (a localCheckpoint's
+    // plan holds the real work) and the plan of the frame it returns.
+    // Sole exception: the O(n²) recall BASELINE embed_neardup_exact,
+    // whose non-equi a_id < b_id join is intentional and
+    // hard-ceilinged at 100k rows by its own guard.
     val allowedQuadratic = Set("embed_neardup_exact")
     val offenders = SparkEntry.queries.keys.toSeq.sorted
       .filterNot(allowedQuadratic)
-      .flatMap { name =>
-        val p = plan(SparkEntry.queries(name)(spark, sf))
-        if (p.contains("CartesianProduct") ||
-            p.contains("BroadcastNestedLoopJoin")) Some(name) else None
-      }
+      .filterNot(name =>
+        cartesianFree(builtPlans(SparkEntry.queries(name)(spark, sf)).map(_._2)))
     assert(offenders.isEmpty, s"queries planning cartesians: $offenders")
+  }
+
+  test("the sweep's capture holds the plans that ran while a query was built") {
+    // ngram_jaccard localCheckpoints its pairs: the returned frame only
+    // scans the checkpointed rows, so a sweep of that plan alone would
+    // pass vacuously; the checkpoint's execution holds the index
+    // self-join on the shingle hash
+    val ps = builtPlans(SparkEntry.queries("ngram_jaccard")(spark, sf))
+    val returned = ps.last._2
+    assert(returned.contains("Scan ExistingRDD") && !equiJoined(Seq(returned)), returned)
+    val work = ps.init
+    assert(work.exists { case (desc, p) => desc.contains("localCheckpoint") &&
+      "keys \\[1\\]: \\[sh#".r.findFirstIn(p).isDefined }, work.mkString("\n"))
   }
 
   test("IVF centroid training is cached per corpus snapshot") {
@@ -594,16 +631,18 @@ class ScaleShapeSpec extends AnyFunSuite with SparkSpec {
     // scores, so compare against maxDf = ∞)
     val exact = Dedup.ngramJaccard(docs, "doc_id", "text", 0.5, maxDf = Int.MaxValue)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
-    val banded = Dedup.ngramJaccardBanded(docs, "doc_id", "text", 0.5)
-      .select("a_id", "b_id").as[(Long, Long)].collect().toSet
+    var banded = Set.empty[(Long, Long)]
+    // plan audit: no cartesian in any execution the real call ran
+    val ps = Profile.run(spark, "banded") {
+      banded = Dedup.ngramJaccardBanded(docs, "doc_id", "text", 0.5)
+        .select("a_id", "b_id").as[(Long, Long)].collect().toSet
+      banded.size.toLong
+    }.plans.map(_._2)
+    assert(equiJoined(ps) && cartesianFree(ps), ps.mkString("\n"))
     assert(banded.subsetOf(exact), "the prescreen must never invent a pair")
     val recall = if (exact.isEmpty) 1.0 else banded.size.toDouble / exact.size
     info(f"banded-jaccard recall at θ=0.5: $recall%.2f (${banded.size}/${exact.size})")
     assert(recall >= 0.4, s"recall $recall collapsed — banding misconfigured")
-    // plan audit: no cartesian anywhere in the lazy plan
-    val p = plan(Dedup.ngramJaccardBanded(docs, "doc_id", "text", 0.5,
-      materialize = false))
-    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
   }
 
   test("ngram df cap drops stop-shingle-only candidate pairs") {
