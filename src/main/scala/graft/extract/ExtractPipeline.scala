@@ -10,11 +10,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Conversion result carried per row (C12 error capture). Top-level so
-  * Catalyst codegen can construct/read it without reflection fallback.
-  */
-final case class ExtractOut(status: String, markdown: String, error: String)
-
 /** payload → struct(status, markdown, error) as a NATIVE expression —
   * identical values to the former `udf(extractSafe)` wrapper, minus
   * the per-row ScalaUDF machinery (closure dispatch, catalyst↔Scala

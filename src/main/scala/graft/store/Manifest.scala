@@ -1,7 +1,10 @@
 package graft.store
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.extract.ExtractPipeline
 
 /** S10 — per-partition checkpoint, lineage + metrics manifest, exact
@@ -10,11 +13,7 @@ import graft.extract.ExtractPipeline
   * The north star stores this in an Iceberg manifest table; no Iceberg
   * runtime ships in this sandbox (/opt/spark/jars has none), so the
   * same contract is realized as partitioned parquet + an explicit
-  * manifest table:
-  *
-  *   manifest(partition_id int, status string, rows_in long,
-  *            rows_out long, ok_rows long, err_rows long,
-  *            started_ts timestamp, finished_ts timestamp, attempt int)
+  * manifest table with the columns of [[Manifest.Schema]].
   *
   * Work unit = hash partition `pmod(xxhash64(conv_id), numPartitions)`.
   * Commit protocol per batch of partitions:
@@ -22,20 +21,36 @@ import graft.extract.ExtractPipeline
   *      lineage: a crash before completion leaves the started row, so
   *      the resume's attempt counter increments);
   *   2. write extracted rows partitionBy(partition_id), dynamic
-  *      partition overwrite → idempotent re-run of any partition;
+  *      partition overwrite (an option of this write, not of the
+  *      session) → idempotent re-run of any partition;
   *   3. append one 'done' manifest row per completed partition
-  *      (rows_in from the input batch, rows_out/ok/err from the output).
-  * Resume = left_anti join of the partition domain against
-  * `manifest.status='done'` — exactly the not-yet-committed work,
+  *      (rows_in from the input batch, rows_out/ok/err from re-reading
+  *      the written partitions).
+  * Resume = the partition domain minus `manifest.status='done'`
+  * (`pending`, a left_anti join) — exactly the not-yet-committed work,
   * regardless of where the previous run died. A partition that was
   * written but whose manifest append was lost is simply rewritten
   * (overwrite ⇒ same bytes, exactly-once output semantics).
   *
-  * At cluster scale the same protocol holds per real executor fleet:
-  * the manifest append is the only serial point and is O(partitions),
-  * not O(rows).
+  * The manifest holds O(partitions · attempts) rows, not O(rows), so
+  * a commit's bookkeeping runs on the driver: it collects the
+  * manifest's (partition_id, status, attempt) once, picks the lowest
+  * pending partitions and the attempt from it, collects rows_in and the
+  * output counts as per-partition maps, and builds both appends' rows
+  * from them. Spark runs only the scans, the data write and the
+  * appends; no join plans a manifest row. At cluster scale the same
+  * protocol holds per real executor fleet: the manifest append is the
+  * only serial point.
   */
 object Manifest {
+
+  /** The manifest's columns: `load` gives an empty manifest this
+    * schema and every append writes its rows in it.
+    */
+  val Schema: StructType = StructType.fromDDL(
+    "partition_id int, status string, rows_in long, rows_out long, " +
+      "ok_rows long, err_rows long, started_ts timestamp, " +
+      "finished_ts timestamp, attempt int")
 
   def partitionId(numPartitions: Int) =
     pmod(xxhash64(col("conv_id")), lit(numPartitions.toLong)).cast("int")
@@ -45,12 +60,7 @@ object Manifest {
     if (p.exists() && p.listFiles() != null && p.listFiles().nonEmpty)
       spark.read.parquet(manifestDir)
     else
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "partition_id int, status string, rows_in long, rows_out long, " +
-            "ok_rows long, err_rows long, started_ts timestamp, " +
-            "finished_ts timestamp, attempt int"))
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Schema)
   }
 
   /** Partitions still to do: domain \ done (left_anti). */
@@ -110,74 +120,72 @@ object Manifest {
       manifestDir: String, numPartitions: Int,
       partitionsPerCommit: Int = Int.MaxValue,
       maxBatches: Int = Int.MaxValue): Int = {
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val withPid = transcripts.withColumn("partition_id", partitionId(numPartitions))
     var processed = 0
     var batches = 0
     while (batches < maxBatches) {
-      val manifest = load(spark, manifestDir)
-      val todo = pending(spark, numPartitions, manifest)
-        .orderBy("partition_id").limit(partitionsPerCommit)
-        .collect().map(_.getInt(0))
+      // the manifest is O(partitions · attempts) rows: read it once and
+      // decide on the driver (the same answer as `pending`, lowest first)
+      val manifest = load(spark, manifestDir).select("partition_id", "status", "attempt")
+        .collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2)))
+      val done = manifest.collect { case (p, "done", _) => p }.toSet
+      val todo = (0 until numPartitions).filterNot(done).take(partitionsPerCommit)
       if (todo.isEmpty) return processed
-      val started = new java.sql.Timestamp(System.currentTimeMillis())
+      val started = new Timestamp(System.currentTimeMillis())
       // attempt counts PRIOR 'started' rows for these partitions — a
       // crash between the started append and the done append leaves the
       // started row behind, so a resume records attempt 2, not 1
-      val attempt = 1 + manifest.filter(col("partition_id").isin(todo.toIndexedSeq: _*)
-          && col("status") === "started")
-        .agg(coalesce(max("attempt"), lit(0))).collect()(0).getInt(0)
+      val attempt = 1 + manifest.collect {
+        case (p, "started", a) if todo.contains(p) => a }.maxOption.getOrElse(0)
 
-      import spark.implicits._
-      val batch = withPid.filter(col("partition_id").isin(todo.toIndexedSeq: _*))
+      val batch = withPid.filter(col("partition_id").isin(todo: _*))
       // rows_in comes from the INPUT batch (what this attempt was
-      // handed), independent of what extraction emits. Collected ONCE
-      // (≤ partitionsPerCommit rows) — as a lazy frame it would re-scan
-      // the input for the 'started' write and again for the 'done' one
-      val inCounts = batch.groupBy("partition_id")
-        .agg(count(lit(1)).as("rows_in"))
-        .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-        .toDF("partition_id", "rows_in")
-      def manifestRows(status: String, stats: DataFrame,
-          finishedTs: Column): DataFrame =
-        todo.toSeq.toDF("partition_id")
-          .join(inCounts, Seq("partition_id"), "left")
-          .join(stats, Seq("partition_id"), "left")
-          .na.fill(0L, Seq("rows_in", "rows_out", "ok_rows", "err_rows"))
-          .withColumn("status", lit(status))
-          .withColumn("started_ts", lit(started))
-          .withColumn("finished_ts", finishedTs)
-          .withColumn("attempt", lit(attempt))
-          .select("partition_id", "status", "rows_in", "rows_out", "ok_rows",
-            "err_rows", "started_ts", "finished_ts", "attempt")
-      val noStats = spark.range(0).select(col("id").cast("int").as("partition_id"),
-        lit(0L).as("rows_out"), lit(0L).as("ok_rows"), lit(0L).as("err_rows"))
+      // handed), independent of what extraction emits
+      val rowsIn = batch.groupBy("partition_id").agg(count(lit(1)))
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
       // 1. intent commit: one 'started' row per partition (attempt
       // lineage; ignored by pending(), which keys on status='done')
-      manifestRows("started", noStats, lit(null).cast("timestamp"))
-        .write.mode(SaveMode.Append).parquet(manifestDir)
+      append(spark, manifestDir, todo, "started", rowsIn, Map.empty, started, null, attempt)
 
       val extracted = ExtractPipeline.overTranscripts(
         batch.select("conv_id", "turn_idx", "partition_id", "text"))
-      // 2. data commit (idempotent: dynamic overwrite by partition)
+      // 2. data commit (idempotent: dynamic overwrite by partition,
+      // scoped to this write — the session's mode is left as it was)
       extracted.write.mode(SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("partition_id").parquet(outDir)
       // 3. manifest commit (lineage + metrics per partition). The row
       // domain is `todo`, NOT the written data — an EMPTY partition
       // must still be marked done or resume would retry it forever.
-      val finished = new java.sql.Timestamp(System.currentTimeMillis())
-      val outStats = scala.util.Try(spark.read.parquet(outDir))
-        .map(_.filter(col("partition_id").isin(todo.toIndexedSeq: _*))
+      val finished = new Timestamp(System.currentTimeMillis())
+      val rowsOut = scala.util.Try(spark.read.parquet(outDir))
+        .map(_.filter(col("partition_id").isin(todo: _*))
           .groupBy("partition_id").agg(
-            count(lit(1)).as("rows_out"),
-            count(when(col("status") === "ok", 1)).as("ok_rows"),
-            count(when(col("status") === "err", 1)).as("err_rows")))
-        .getOrElse(noStats)
-      manifestRows("done", outStats, lit(finished))
-        .write.mode(SaveMode.Append).parquet(manifestDir)
+            count(lit(1)),
+            count(when(col("status") === "ok", 1)),
+            count(when(col("status") === "err", 1)))
+          .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
+          .toMap)
+        .getOrElse(Map.empty[Int, (Long, Long, Long)])
+      append(spark, manifestDir, todo, "done", rowsIn, rowsOut, started, finished, attempt)
       processed += todo.length
       batches += 1
     }
     processed
+  }
+
+  /** Appends one `status` row per partition of `todo`, built on the
+    * driver; a partition missing from a count map counts 0.
+    */
+  private def append(spark: SparkSession, manifestDir: String, todo: Seq[Int],
+      status: String, rowsIn: Map[Int, Long], rowsOut: Map[Int, (Long, Long, Long)],
+      started: Timestamp, finished: Timestamp, attempt: Int): Unit = {
+    val rows = todo.map { p =>
+      val (out, ok, err) = rowsOut.getOrElse(p, (0L, 0L, 0L))
+      Row(p, status, rowsIn.getOrElse(p, 0L), out, ok, err, started, finished, attempt)
+    }
+    // one file per append (a local relation would write one per core)
+    spark.createDataFrame(rows.asJava, Schema).coalesce(1)
+      .write.mode(SaveMode.Append).parquet(manifestDir)
   }
 }

@@ -439,14 +439,18 @@ object Dedup {
     val offsets = widths.scanLeft(0)(_ + _)
     // no sketch persist — the block self-join's legs share one reused
     // exchange on (blk, key), so the kernel runs once (see minhashPairs)
+    // `sim` leaves through the generator, not beside it: the join's
+    // inferred isnotnull(sim) then stops at the Generate instead of
+    // being pushed down to a Filter that runs simhash60 again
     val s = spread(docs)
       .select(col(idCol).as("id"), simhashCol(col(textCol)).as("sim"))
-    val blocks = s.select(col("id"), col("sim"),
+    val blocks = s.select(col("id"),
       explode(array((0 until nBlocks).map(b =>
         struct(lit(b).as("blk"),
           shiftrightunsigned(col("sim"), offsets(b))
-            .bitwiseAND(lit((1L << widths(b)) - 1)).as("key"))): _*)).as("bk"))
-      .select(col("id"), col("sim"), col("bk.blk"), col("bk.key"))
+            .bitwiseAND(lit((1L << widths(b)) - 1)).as("key"),
+          col("sim").as("sim"))): _*)).as("bk"))
+      .select(col("id"), col("bk.sim"), col("bk.blk"), col("bk.key"))
     val a = blocks.select(col("id").as("a_id"), col("sim").as("sa"),
       col("blk"), col("key"))
     val b = blocks.select(col("id").as("b_id"), col("sim").as("sb"),

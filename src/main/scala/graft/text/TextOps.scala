@@ -153,18 +153,27 @@ object TextOps {
     * approx_percentile (a mergeable sketch) and accept the error bound.
     */
   def groupMedianExact(df: DataFrame, groupCol: String, valueCol: String,
-      idCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val byGroup = Window.partitionBy(col(groupCol))
-    val w = byGroup.orderBy(col(valueCol), col(idCol))
-    // null values are EXCLUDED up front (the SQL aggregate convention):
-    // leaving them in would also break cross-engine element identity —
-    // Spark ranks ASC nulls first, DuckDB nulls last
-    df.filter(col(valueCol).isNotNull)
-      .withColumn("__gm_rn", row_number().over(w))
-      .withColumn("__gm_n", count(lit(1)).over(byGroup))
+      idCol: String): DataFrame =
+    // rank (n+1)/2 is in 1..n, so the pick is never a null value
+    rankedInGroup(df, groupCol, valueCol, idCol, "__gm_rn", "__gm_n")
       .filter(col("__gm_rn") === ((col("__gm_n") + 1) / 2).cast("long"))
       .select(col(groupCol), col(valueCol).as("median_value"))
+
+  /** `df` plus each row's rank `rn` by (valueCol, idCol) in its group
+    * and the group's count `n` of non-null values. Null values are
+    * EXCLUDED (the SQL aggregate convention): they rank last, after
+    * rank n, and the callers drop them after the window. A null filter
+    * before the window would be pushed through the caller's projection
+    * and re-run the value's expression — for qualityScore the native
+    * wordStats kernel — inside a Filter.
+    */
+  private def rankedInGroup(df: DataFrame, groupCol: String, valueCol: String,
+      idCol: String, rn: String, n: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val byGroup = Window.partitionBy(col(groupCol))
+    df.withColumn(rn,
+        row_number().over(byGroup.orderBy(col(valueCol).asc_nulls_last, col(idCol))))
+      .withColumn(n, count(col(valueCol)).over(byGroup))
   }
 
   /** Exact per-group quantiles by RANK PICK, generalizing
@@ -183,14 +192,10 @@ object TextOps {
     // clamps to the min; both are better served by max/min aggregates
     require(qs.nonEmpty && qs.forall(q => q > 0.0 && q < 1.0),
       s"quantiles must lie strictly in (0,1), got $qs")
-    import org.apache.spark.sql.expressions.Window
-    val byGroup = Window.partitionBy(col(groupCol))
-    val w = byGroup.orderBy(col(valueCol), col(idCol))
-    df.filter(col(valueCol).isNotNull)
-      .withColumn("__gp_rn", row_number().over(w))
-      .withColumn("__gp_n", count(lit(1)).over(byGroup))
+    rankedInGroup(df, groupCol, valueCol, idCol, "__gp_rn", "__gp_n")
       .withColumn("q", explode(array(qs.map(lit): _*)))
-      .filter(col("__gp_rn") ===
+      // an all-null group (n = 0) would otherwise pick its rank-1 null
+      .filter(col(valueCol).isNotNull && col("__gp_rn") ===
         greatest(lit(1L), floor(col("q") * (col("__gp_n") + 1)).cast("long")))
       .select(col(groupCol), col("q"), col(valueCol).as("value"))
   }
@@ -208,10 +213,7 @@ object TextOps {
       idCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val byGroup = Window.partitionBy(col(groupCol))
-    val w = byGroup.orderBy(col(scoreCol), col(idCol))
-    df.filter(col(scoreCol).isNotNull)
-      .withColumn("__gm_rn", row_number().over(w))
-      .withColumn("__gm_n", count(lit(1)).over(byGroup))
+    rankedInGroup(df, groupCol, scoreCol, idCol, "__gm_rn", "__gm_n")
       .withColumn("__gm_med",
         max(when(col("__gm_rn") === ((col("__gm_n") + 1) / 2).cast("long"),
           col(scoreCol))).over(byGroup))

@@ -432,8 +432,11 @@ class ScaleShapeSpec extends AnyFunSuite with SparkSpec {
     // isnotnull(kernel)` below the Generate and push it through the
     // staging alias — the kernel then runs 3x per row (FilterExec has
     // no subexpression elimination). Staged.explodeOnce (explode_outer
-    // + output-attribute filter) defeats the inference; this test pins
-    // that no kernel name ever appears in a physical Filter condition.
+    // + output-attribute filter) defeats the inference. A join's
+    // inferred, or a later operator's explicit, isnotnull on a kernel
+    // result is pushed down the same way (simhash_pairs' block join,
+    // the quality operators' null check). This test pins that no
+    // kernel name ever appears in a physical Filter condition.
     val kernels = Seq("shinglehashes", "minhashsig", "hashembed",
       "simhash", "wordstats")
     // the dedup operators and decontaminate_bloom localCheckpoint their
@@ -444,6 +447,7 @@ class ScaleShapeSpec extends AnyFunSuite with SparkSpec {
       "ngram_jaccard_banded" -> executedPlans(
         Dedup.ngramJaccardBanded(docs, "doc_id", "text", 0.8)),
       "minhash_pairs" -> executedPlans(Dedup.minhashPairs(docs, "doc_id", "text")),
+      "simhash_pairs" -> executedPlans(Dedup.simhashPairs(docs, "doc_id", "text", 3)),
       "decontaminate_bloom" -> executedPlans(Corpus.decontaminateBloom(
         docs.filter(col("doc_id") % 20 =!= 0), docs.filter(col("doc_id") % 20 === 0),
         "doc_id", "text", n = 4)))
@@ -451,7 +455,8 @@ class ScaleShapeSpec extends AnyFunSuite with SparkSpec {
     for ((name, ps) <- executed)
       assert(ps.exists(p => kernels.exists(p.toLowerCase.contains)),
         s"$name: no kernel in\n${ps.mkString("\n")}")
-    val planned = Seq("decontaminate", "embed_docs", "vocab_top", "distinctive_terms")
+    val planned = Seq("decontaminate", "embed_docs", "vocab_top", "distinctive_terms",
+      "quality_filter", "group_median", "group_percentiles")
       .map(q => q -> Seq(plan(SparkEntry.queries(q)(spark, sf))))
     for ((name, ps) <- executed ++ planned; p = ps.mkString("\n")) {
       val badConds = p.linesIterator
@@ -612,6 +617,25 @@ class ScaleShapeSpec extends AnyFunSuite with SparkSpec {
     val med = TextOps.groupMedianExact(df, "g", "v", "id")
       .as[(String, Double)].collect().toMap
     got.filter(_._2 == 0.5).foreach { case (g, _, v) => assert(v == med(g)) }
+  }
+
+  test("group median, percentiles and above-median filter ignore null values") {
+    import spark.implicits._
+    import graft.text.TextOps
+    val df = Seq(("g", 1L, Option(4.0)), ("g", 2L, None), ("g", 3L, Option(1.0)),
+      ("g", 4L, None), ("g", 5L, Option(6.0)), ("h", 6L, None))
+      .toDF("grp", "id", "v")
+    val nonNull = df.filter(col("v").isNotNull)
+    def same(op: DataFrame => DataFrame) =
+      assert(op(df).collect().toSet == op(nonNull).collect().toSet)
+    same(TextOps.groupMedianExact(_, "grp", "v", "id"))
+    same(TextOps.groupPercentilesExact(_, "grp", "v", "id"))
+    same(TextOps.aboveGroupMedian(_, "grp", "v", "id"))
+    // the all-null group "h" has no median, no quantile and no kept row
+    assert(TextOps.groupMedianExact(df, "grp", "v", "id").as[(String, Double)]
+      .collect().toSeq == Seq(("g", 4.0)))
+    assert(TextOps.groupPercentilesExact(df, "grp", "v", "id")
+      .filter(col("grp") === "h").isEmpty)
   }
 
   test("topPerGroup: k best per group, score desc, id tiebreak") {

@@ -62,6 +62,130 @@ class SparkOpsSpec extends AnyFunSuite with SparkSpec {
     assert(spark.read.parquet(out).count() == count1)
   }
 
+  private def convs(seed: Long, n: Long) = {
+    import spark.implicits._
+    spark.range(0, n).flatMap(i => TranscriptGen.genConv(seed, i)._1).toDF()
+  }
+
+  private def doneRows(mdir: String) = {
+    import spark.implicits._
+    Manifest.load(spark, mdir).filter(col("status") === "done")
+      .select("partition_id", "rows_in", "rows_out", "ok_rows", "err_rows")
+      .as[(Int, Long, Long, Long, Long)].collect().toSeq
+  }
+
+  test("manifest: the commit leaves the session's partitionOverwriteMode as it was") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "STATIC")
+    try {
+      Manifest.runResumable(spark, convs(42L, 5), tmpDir() + "/out",
+        tmpDir() + "/manifest", 2)
+      assert(spark.conf.get(key) == "STATIC")
+    } finally spark.conf.unset(key)
+  }
+
+  test("manifest: a started row without its done row makes the resume attempt 2") {
+    import spark.implicits._
+    val transcripts = convs(42L, 10)
+    val out = tmpDir() + "/out"
+    val mdir = tmpDir() + "/manifest"
+    Manifest.runResumable(spark, transcripts, out, mdir, 4)
+    // what a crash between the two appends of partition 0 leaves: its
+    // 'started' row and no 'done' row
+    val crashed = tmpDir() + "/manifest2"
+    Manifest.load(spark, mdir)
+      .filter(!(col("partition_id") === 0 && col("status") === "done"))
+      .write.parquet(crashed)
+    assert(Manifest.runResumable(spark, transcripts, out, crashed, 4) == 1)
+    val m = Manifest.load(spark, crashed)
+    assert(m.filter(col("partition_id") === 0).select("status", "attempt")
+      .as[(String, Int)].collect().sorted.toSeq ==
+      Seq(("done", 2), ("started", 1), ("started", 2)))
+    val later = lit(new java.sql.Timestamp(System.currentTimeMillis() + 60000L))
+    assert(Manifest.snapshotAsOf(m, later).select("partition_id", "attempt")
+      .as[(Int, Int)].collect().toMap == Map(0 -> 2, 1 -> 1, 2 -> 1, 3 -> 1))
+  }
+
+  test("manifest: each empty hash partition gets one done row with zero counts") {
+    import spark.implicits._
+    val transcripts = convs(42L, 3)
+    val out = tmpDir() + "/out"
+    val mdir = tmpDir() + "/manifest"
+    val n = 8 // more partitions than conversations
+    assert(Manifest.runResumable(spark, transcripts, out, mdir, n, partitionsPerCommit = 3) == n)
+    val used = transcripts.select(Manifest.partitionId(n)).distinct().as[Int].collect().toSet
+    assert(used.size < n)
+    val done = doneRows(mdir)
+    assert(done.map(_._1).sorted == (0 until n))
+    assert(done.filterNot(d => used(d._1)).forall(d => d == ((d._1, 0L, 0L, 0L, 0L))))
+    assert(Manifest.runResumable(spark, transcripts, out, mdir, n) == 0)
+  }
+
+  test("manifest: every done row has rows_in == rows_out == ok_rows + err_rows") {
+    val transcripts = convs(11L, 30)
+    val mdir = tmpDir() + "/manifest"
+    Manifest.runResumable(spark, transcripts, tmpDir() + "/out", mdir, 6,
+      partitionsPerCommit = 4)
+    val done = doneRows(mdir)
+    assert(done.size == 6 && done.map(_._2).sum == transcripts.count())
+    done.foreach { case (p, in, out, ok, err) =>
+      assert(in == out && out == ok + err, s"partition $p: $in/$out/$ok/$err")
+    }
+  }
+
+  test("manifest: a toDF-built manifest is appended to and resumed, lowest pending ids first") {
+    import spark.implicits._
+    val mdir = tmpDir() + "/manifest"
+    val t0 = new java.sql.Timestamp(1767225600000L)
+    // the column types the manifest has always had on disk
+    Seq((1, "started", 4L, 0L, 0L, 0L, t0, Option.empty[java.sql.Timestamp], 1),
+      (1, "done", 4L, 4L, 4L, 0L, t0, Option(t0), 1),
+      (4, "done", 2L, 2L, 1L, 1L, t0, Option(t0), 1))
+      .toDF("partition_id", "status", "rows_in", "rows_out", "ok_rows", "err_rows",
+        "started_ts", "finished_ts", "attempt")
+      .write.parquet(mdir)
+    val transcripts = convs(5L, 20)
+    val out = tmpDir() + "/out"
+    val n = 8
+    def doneIds = doneRows(mdir).map(_._1).toSet
+    // each commit takes the lowest ids that `pending` returns
+    val picks = Iterator.continually {
+      val want = Manifest.pending(spark, n, Manifest.load(spark, mdir))
+        .as[Int].collect().sorted.take(3).toSet
+      val before = doneIds
+      assert(Manifest.runResumable(spark, transcripts, out, mdir, n,
+        partitionsPerCommit = 3, maxBatches = 1) == want.size)
+      assert(doneIds -- before == want)
+      want
+    }.takeWhile(_.nonEmpty).toSeq
+    assert(picks == Seq(Set(0, 2, 3), Set(5, 6, 7)))
+    val m = Manifest.load(spark, mdir)
+    assert(m.schema == Manifest.load(spark, tmpDir() + "/none").schema)
+    assert(m.filter(col("status") === "done").count() == n)
+  }
+
+  test("manifest: a commit plans no join in its appends and runs fewer jobs") {
+    val input = tmpDir() + "/transcripts"
+    convs(3L, 40).write.parquet(input)
+    val transcripts = spark.read.parquet(input)
+    val out = tmpDir() + "/out"
+    val mdir = tmpDir() + "/manifest"
+    def commit() = Manifest.runResumable(spark, transcripts, out, mdir, 8,
+      partitionsPerCommit = 2, maxBatches = 1)
+    commit() // the second commit is the steady state: manifest and output exist
+    val r = graft.bench.Profile.run(spark, "commit")(commit().toLong)
+    assert(r.rows == 2)
+    val appends = r.plans.map(_._2)
+      .filter(p => p.contains("InsertIntoHadoopFsRelationCommand") && p.contains(mdir))
+    assert(appends.size == 2, r.plans.mkString("\n"))
+    assert(appends.forall(!_.contains("Join")), appends.mkString("\n"))
+    // with the bookkeeping planned as Spark queries (two manifest
+    // queries, a rows_in round trip, two left joins per append) this
+    // commit ran 16 jobs
+    assert(r.jobs < 16, graft.bench.Profile.report(r))
+    info(s"${r.jobs} jobs")
+  }
+
   test("manifest snapshot: latest committed attempt as of ts, intents invisible") {
     import spark.implicits._
     val epochMs = 1767225600000L
